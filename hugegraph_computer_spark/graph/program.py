@@ -1,38 +1,37 @@
-"""The engine's user-extension surface: declarative vertex programs.
+"""The engine's one superstep loop and its extension surface: vertex programs.
 
-The reference exposes six pluggable classes per job (SURVEY.md §2.10):
-``worker.computation_class`` (Computation.compute0/compute,
-computer-api/.../worker/Computation.java:39-102), ``master.computation_class``
-(MasterComputation.compute, master/MasterComputation.java:54),
-``worker.combiner_class`` (combiner/Combiner.java),
-``algorithm.message_class`` / ``algorithm.result_class`` (ComputerOptions.
-java:74-84) and ``algorithm.params_class`` (AlgorithmParams.java:29).
+The reference runs every algorithm through one master/worker superstep
+loop (MasterService.java:183-279) and exposes six pluggable classes per
+job (SURVEY.md §2.10): ``worker.computation_class``
+(Computation.compute0/compute, computer-api/.../worker/Computation.java:
+39-102), ``master.computation_class`` (MasterComputation.compute,
+master/MasterComputation.java:54), ``worker.combiner_class``
+(combiner/Combiner.java), ``algorithm.message_class`` /
+``algorithm.result_class`` (ComputerOptions.java:74-84) and
+``algorithm.params_class`` (AlgorithmParams.java:29).
 
 Here the same contract is ONE Python dataclass over DataFrames — every hook
-is a plan fragment (pure column expressions or vectorized pandas UDFs), so
-a user-defined program gets the identical engine treatment as the built-ins:
-cached hash-partitioned adjacency, one materialization per superstep with
-Observation-carried aggregators, checkpoint/resume, frontier (vote-to-halt)
-messaging.
+is a plan fragment (pure column expressions), and ``run_program`` is the
+only superstep loop: the built-ins (pagerank, personalized_pagerank, wcc,
+lpa, coreness) are VertexPrograms run by it exactly like a user-defined
+program — cached hash-partitioned adjacency, one materialization per
+superstep with Observation-carried aggregators, checkpoint/resume,
+frontier (vote-to-halt) messaging.
 
     VertexProgram(
-        init,          # vertices DF -> state DF (must keep vid; superstep-0
-                       #   value init ≡ compute0)
-        message,       # (frontier-joined scatter row) -> message column expr
-                       #   ≡ sendMessageToAllEdges; rows are
-                       #   (vid, <state cols>, dst) per (frontier × edge)
-        combine,       # list of agg Columns over groupBy(dst)
-                       #   ≡ worker.combiner_class (sum/min/max/...)
-        apply,         # (state DF ⟕ combined msgs DF) -> new state DF
-                       #   ≡ compute; must emit vid + state cols + `active`
-        aggregators,   # dict name -> Column over the new state
-                       #   ≡ registerAggregator; delivered to master_continue
-        master_continue,  # (superstep, aggs dict) -> bool ≡ MasterComputation
+        init,          # graph -> superstep-0 state DF (vid, ...) ≡ compute0
+        frontier,      # state -> (vid, msg): who sends what, projected
+                       #   BEFORE the adjacency join ≡ sendMessageToAllEdges
+        combine,       # (dst, msg) DF -> (dst, msg) DF, one row per target
+                       #   ≡ worker.combiner_class (sum/min/vote/...)
+        apply,         # (state, combined msgs, previous aggregates) -> new
+                       #   state ≡ beforeSuperstep + compute; may add columns
+                       #   read only by the aggregators (dropped after them)
+        aggregators,   # superstep -> {name: agg Column} over the new state
+                       #   ≡ registerAggregator; delivered to the next
+                       #   superstep's apply and to master_continue
+        master_continue,  # (superstep, aggs) -> bool ≡ MasterComputation
     )
-
-``run_program`` is the generic loop; the tuned built-ins (pagerank/wcc/lpa)
-are hand-specialized instances of the same shape (their docstrings map each
-stage), kept separate only to pin exact reference formulas.
 """
 
 from __future__ import annotations
@@ -49,13 +48,16 @@ from hugegraph_computer_spark.graph.graph import Graph
 
 @dataclass
 class VertexProgram:
-    """A BSP vertex program as DataFrame plan fragments."""
+    """A BSP vertex program as DataFrame plan fragments. ``frontier``,
+    ``combine`` and ``apply`` make up the default scatter superstep; a
+    program that gathers instead leaves them unset and hands
+    ``run_program`` its own ``step``."""
 
-    init: Callable[[DataFrame], DataFrame]
-    message: Callable[[DataFrame], Column]
-    combine: Callable[[], list[Column]]
-    apply: Callable[[DataFrame, DataFrame], DataFrame]
-    aggregators: Callable[[], dict[str, Column]] = field(default=lambda: {})
+    init: Callable[[Graph], DataFrame]
+    frontier: Callable[[DataFrame], DataFrame] | None = None
+    combine: Callable[[DataFrame], DataFrame] | None = None
+    apply: Callable[[DataFrame, DataFrame, dict], DataFrame] | None = None
+    aggregators: Callable[[int], dict[str, Column]] = field(default=lambda s: {})
     master_continue: Callable[[int, dict], bool] = field(default=lambda s, a: True)
     name: str = "vertex_program"
 
@@ -67,118 +69,104 @@ def run_program(
     checkpoint_dir: str | None = None,
     checkpoint_every: int = 1,
     resume: bool = False,
+    step: Callable[[DataFrame, dict], DataFrame] | None = None,
+    stats_out: dict | None = None,
 ) -> DataFrame:
-    """Generic superstep loop for a VertexProgram.
+    """Run ``program`` until it halts; returns the final state.
 
-    State contract: ``init`` returns (vid, ..., active boolean); each
-    superstep scatters messages from active vertices along the (cached,
-    co-partitioned) adjacency, combines per target, applies, and stops
-    when no vertex is active (vote-to-halt, MasterService.finishedIteration
-    :332-343) or ``master_continue`` returns False.
+    Superstep 0 materializes ``init``. Each later superstep builds the new
+    state with ``step(state, previous aggregates)`` — by default
+    frontier ⋈ cached adjacency → explode → combine → apply — and
+    materializes it exactly once, the aggregators riding that job via
+    ``observe`` (the reference ships partial aggregators with the compute
+    pass, WorkerAggrManager.java:89-141); columns the state did not have
+    before are dropped after the aggregators saw them. The run halts when
+    ``master_continue`` returns False (MasterService.finishedIteration
+    :332-343) — asked after every superstep but 0, which only initializes
+    — or after superstep ``max_supersteps - 1``.
+
+    ``resume=True`` continues after the latest complete snapshot, applying
+    the same halt rule to its aggregates. ``stats_out`` receives the final
+    aggregates, ``supersteps`` (the last superstep + 1, also when a resume
+    ran none) and ``history``, one metrics dict per superstep run here.
     """
-    spark = graph.edges.sparkSession
     loop = SuperstepLoop(
-        spark, program.name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
+        graph.edges.sparkSession, program.name, checkpoint_dir, max_supersteps,
+        checkpoint_every, resume=resume,
     )
-    adj = graph.adjacency()
+    if step is None:
+        step = _scatter_step(graph.adjacency(), program)
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if not aggs.get("__continue__", True):
-                return state
-            start = s + 1
-
-    if state is None:
-        state = program.init(graph.vertices())
-        assert "vid" in state.columns and "active" in state.columns, (
-            "init must produce (vid, ..., active)"
-        )
-        state = loop.save(0, state, {"__continue__": True}, {"supersteps": 0})
-
-    state_cols = [c for c in state.columns if c != "active"]
-    for s in range(start, max_supersteps):
+    def superstep(s: int, new_state: DataFrame, cols: list[str]):
         t0 = time.time()
-        frontier = state.where("active")
-        scatter = adj.join(frontier, "vid").select(
-            *[frontier[c] for c in state_cols],
-            F.explode("nbrs").alias("dst"),
-        )
-        msgs = (
-            scatter.select(F.col("dst"), program.message(scatter).alias("msg"))
-            .groupBy("dst")
-            .agg(*program.combine())
-        )
-        new_state = program.apply(state, msgs)
-        obs = Observation(f"{program.name}_s{s}")
-        agg_cols = [c.alias(k) for k, c in program.aggregators().items()]
-        observed = new_state.observe(
-            obs,
-            F.sum(F.col("active").cast("long")).alias("__active__"),
-            *agg_cols,
-        )
-        state = loop.materialize(s, observed)
-        row = dict(obs.get)
-        active = int(row.pop("__active__") or 0)
-        cont = active > 0 and program.master_continue(s, row) and s < max_supersteps - 1
-        row["__continue__"] = cont
-        loop.commit(s, row, {"supersteps": s, "sec": time.time() - t0})
-        if not cont:
-            break
+        aggregators = program.aggregators(s)
+        if aggregators:
+            obs = Observation(f"{program.name}_s{s}")
+            new_state = new_state.observe(
+                obs, *[c.alias(k) for k, c in aggregators.items()]
+            )
+        out = loop.materialize(s, new_state.select(*cols))
+        aggs = dict(obs.get) if aggregators else {}
+        loop.commit(s, aggs, {"sec": time.time() - t0})
+        return out, aggs
+
+    resumed = loop.resume() if resume else None
+    if resumed is None:
+        init = program.init(graph)
+        s, (state, aggs) = 0, superstep(0, init, init.columns)
+    else:
+        s, state, aggs = resumed
+    while s < max_supersteps - 1 and (s == 0 or program.master_continue(s, aggs)):
+        s += 1
+        state, aggs = superstep(s, step(state, aggs), state.columns)
 
     loop.cleanup()
+    if stats_out is not None:
+        stats_out.update(aggs)
+        stats_out["supersteps"] = s + 1
+        stats_out["history"] = [
+            {"superstep": r.superstep, **r.metrics} for r in loop.history
+        ]
     return state
 
 
+def _scatter_step(adj: DataFrame, program: VertexProgram):
+    """The scatter superstep: the frontier's messages travel along the
+    cached, co-partitioned adjacency (no exchange on its side); explode +
+    combine partial-aggregates map-side, so a hub's chunks never meet on
+    one reducer before the combine."""
+
+    def step(state: DataFrame, aggs: dict) -> DataFrame:
+        msgs = adj.join(program.frontier(state), "vid").select(
+            F.explode("nbrs").alias("dst"), "msg"
+        )
+        return program.apply(state, program.combine(msgs), aggs)
+
+    return step
+
+
+def count_changed(s: int) -> dict[str, Column]:
+    """The vote-to-halt aggregator of a state that flags its ``changed``
+    vertices. Superstep 0, where every vertex starts changed, needs none."""
+    return {"changed": F.sum(F.col("changed").cast("long"))} if s else {}
+
+
+def any_changed(s: int, aggs: dict) -> bool:
+    return bool(aggs["changed"])  # None: the state has no rows
+
+
 # ---------------------------------------------------------------- examples
-def wcc_program() -> VertexProgram:
-    """WCC as a VertexProgram — the protocol twin of operators.wcc
-    (Wcc.java:34-73 semantics; min-combiner, vote-to-halt)."""
-    return VertexProgram(
-        name="wcc_program",
-        init=lambda v: v.select(
-            "vid", F.col("vid").alias("label"), F.lit(True).alias("active")
-        ),
-        message=lambda scatter: scatter["label"],
-        combine=lambda: [F.min("msg").alias("msg")],
-        apply=lambda state, msgs: (
-            state.join(msgs, state["vid"] == msgs["dst"], "left")
-            .select(
-                state["vid"],
-                F.least(
-                    state["label"], F.coalesce(msgs["msg"], state["label"])
-                ).alias("new_label"),
-                state["label"].alias("old_label"),
-            )
-            .select(
-                "vid",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") < F.col("old_label")).alias("active"),
-            )
-        ),
-    )
-
-
-def degree_program(weighted: bool = False) -> VertexProgram:
+def degree_program() -> VertexProgram:
     """Degree centrality as a single-superstep VertexProgram
     (DegreeCentrality.java:38-131: everyone scatters 1, sum, halt)."""
     return VertexProgram(
         name="degree_program",
-        init=lambda v: v.select(
-            "vid", F.lit(0.0).alias("degree"), F.lit(True).alias("active")
-        ),
-        message=lambda scatter: F.lit(1.0),
-        combine=lambda: [F.sum("msg").alias("msg")],
-        apply=lambda state, msgs: (
-            state.join(msgs, state["vid"] == msgs["dst"], "left")
-            .select(
-                state["vid"],
-                F.coalesce(msgs["msg"], F.lit(0.0)).alias("degree"),
-                F.lit(False).alias("active"),
-            )
-        ),
+        init=lambda g: g.vertices().select("vid", F.lit(0.0).alias("degree")),
+        frontier=lambda state: state.select("vid", F.lit(1.0).alias("msg")),
+        combine=lambda msgs: msgs.groupBy("dst").agg(F.sum("msg").alias("msg")),
+        apply=lambda state, msgs, aggs: state.join(
+            msgs, state["vid"] == msgs["dst"], "left"
+        ).select(state["vid"], F.coalesce(msgs["msg"], F.lit(0.0)).alias("degree")),
+        master_continue=lambda s, aggs: False,
     )
+

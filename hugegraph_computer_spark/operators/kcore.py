@@ -13,16 +13,22 @@ recompute — same vote-to-halt shape as WCC.
 
 The H-index of a neighbor multiset is computed JVM-side:
 sort desc, count positions where value >= rank — no Python in the loop.
+Each superstep GATHERS every neighbor value over the cached flat edges
+instead of scattering messages, so coreness hands the one superstep loop
+(graph.program.run_program) its own step function.
 """
 
 from __future__ import annotations
 
-import time
+from pyspark.sql import Column, DataFrame, functions as F
 
-from pyspark.sql import Column, DataFrame, Observation, functions as F
-
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
+from hugegraph_computer_spark.graph.program import (
+    VertexProgram,
+    any_changed,
+    count_changed,
+    run_program,
+)
 
 
 def _hindex(values: Column) -> Column:
@@ -45,43 +51,22 @@ def coreness(
     resume: bool = False,
 ) -> DataFrame:
     """Returns ``(vid long, coreness long)`` (0 for isolated vertices)."""
-    spark = graph.edges.sparkSession
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
-    )
     # self-loops neither contribute to coreness nor to the peeling degree;
     # the filter sits over the cached src-partitioned frame (partitioning
     # and sort survive it), so each round's join re-shuffles nothing
     edges = graph.flat_edges(build_hash=True).where(F.col("src") != F.col("dst"))
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if aggs.get("changed", 1) == 0 or s >= max_supersteps - 1:
-                return state.select("vid", F.col("h").alias("coreness"))
-            start = s + 1
-
-    if state is None:
+    def init(g: Graph) -> DataFrame:
         deg = edges.groupBy(F.col("src").alias("vid")).agg(
             F.count(F.lit(1)).cast("long").alias("deg")
         )
-        state = (
-            graph.vertices()
-            .join(deg, "vid", "left")
-            .select(
-                "vid",
-                F.coalesce("deg", F.lit(0)).cast("long").alias("h"),
-                F.lit(True).alias("changed"),
-            )
+        return g.vertices().join(deg, "vid", "left").select(
+            "vid",
+            F.coalesce("deg", F.lit(0)).cast("long").alias("h"),
+            F.lit(True).alias("changed"),
         )
-        state = loop.save(0, state, {"changed": -1}, {"supersteps": 0})
 
-    for s in range(start, max_supersteps):
-        t0 = time.time()
+    def gather(state: DataFrame, aggs: dict) -> DataFrame:
         # vertices adjacent to a change must recompute their H-index over
         # ALL current neighbor values (not only the changed ones)
         affected = (
@@ -99,7 +84,7 @@ def coreness(
             .groupBy(F.col("dst").alias("vid"))
             .agg(_hindex(F.collect_list("nh")).alias("cand"))
         )
-        new_state = (
+        return (
             state.join(nbr_h, "vid", "left")
             .select(
                 "vid",
@@ -114,15 +99,15 @@ def coreness(
                 (F.col("new_h") < F.col("old_h")).alias("changed"),
             )
         )
-        obs = Observation(f"{job_name}_s{s}")
-        observed = new_state.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("c")
-        )
-        state = loop.materialize(s, observed)
-        changed = int(obs.get["c"] or 0)
-        loop.commit(s, {"changed": changed}, {"supersteps": s, "sec": time.time() - t0})
-        if changed == 0:
-            break
 
-    loop.cleanup()
+    program = VertexProgram(
+        name=job_name,
+        init=init,
+        aggregators=count_changed,
+        master_continue=any_changed,
+    )
+    state = run_program(
+        graph, program, max_supersteps, checkpoint_dir, checkpoint_every, resume,
+        step=gather,
+    )
     return state.select("vid", F.col("h").alias("coreness"))

@@ -16,14 +16,15 @@ and oracle-checkable. Everything else matches, including the subtlety that
 votes count only messages from vertices that *changed* last round (delta
 messaging), not a live view of all neighbor labels.
 
-One superstep:
+One superstep of the VertexProgram (run by graph.program.run_program):
 
-    msgs  = adjacency(changed vertices) → explode → (dst, label)
-    vote  = msgs.groupBy(dst, label).count()
-              .groupBy(dst).agg(max(struct(cnt, -label)))   -- argmax with
-                                                            -- min-label ties,
-                                                            -- no window/sort
-    state = state ⟕ vote; adopt vote where present
+    frontier = (vid, label) where label changed last round
+    msgs     = adjacency ⋈ frontier → explode → (dst, label)
+    vote     = msgs.groupBy(dst, label).count()
+                 .groupBy(dst).agg(max(struct(cnt, -label)))   -- argmax with
+                                                               -- min-label ties,
+                                                               -- no window/sort
+    state    = state ⟕ vote; adopt vote where present
 
 The two-level groupBy partial-aggregates (dst,label) pairs map-side, so a
 hub's fan-in never concentrates on one reducer (label cardinality per dst
@@ -32,12 +33,42 @@ bounds the second stage).
 
 from __future__ import annotations
 
-import time
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, Observation, functions as F
-
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
+from hugegraph_computer_spark.graph.program import (
+    VertexProgram,
+    any_changed,
+    count_changed,
+    run_program,
+)
+
+
+def _vote(msgs: DataFrame) -> DataFrame:
+    """Most frequent incoming label per target, smallest on ties."""
+    return (
+        msgs.groupBy("dst", "msg")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .groupBy("dst")
+        .agg(F.max(F.struct(F.col("cnt"), (-F.col("msg")).alias("neg"))).alias("best"))
+        .select("dst", (-F.col("best.neg")).alias("msg"))
+    )
+
+
+def _adopt(state: DataFrame, vote: DataFrame, aggs: dict) -> DataFrame:
+    return (
+        state.join(vote, state["vid"] == vote["dst"], "left")
+        .select(
+            state["vid"],
+            F.coalesce(vote["msg"], state["label"]).alias("new_label"),
+            state["label"].alias("old_label"),
+        )
+        .select(
+            "vid",
+            F.col("new_label").alias("label"),
+            (F.col("new_label") != F.col("old_label")).alias("changed"),
+        )
+    )
 
 
 def lpa(
@@ -49,68 +80,21 @@ def lpa(
     resume: bool = False,
 ) -> DataFrame:
     """Run LPA; returns ``(vid long, label long)``."""
-    spark = graph.edges.sparkSession
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
-    )
-    adj = graph.adjacency()
-
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if aggs.get("senders", 1) == 0 or s >= max_supersteps - 1:
-                return state.select("vid", "label")
-            start = s + 1
-
-    if state is None:
+    program = VertexProgram(
+        name=job_name,
         # superstep 0 (Lpa.java:52-58): label = self id, everyone sends.
-        state = graph.vertices().select(
+        init=lambda g: g.vertices().select(
             "vid", F.col("vid").alias("label"), F.lit(True).alias("changed")
-        )
-        state = loop.save(0, state, {"senders": graph.num_vertices()}, {"supersteps": 0})
-
-    for s in range(start, max_supersteps):
-        t0 = time.time()
-        senders = state.where("changed").select("vid", "label")
-        msgs = adj.join(senders, "vid").select(
-            F.explode("nbrs").alias("dst"), "label"
-        )
-        vote = (
-            msgs.groupBy("dst", "label")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-            .groupBy("dst")
-            .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("neg"))).alias("best"))
-            .select("dst", (-F.col("best.neg")).alias("vote_label"))
-        )
-        new_state = (
-            state.join(vote, state["vid"] == vote["dst"], "left")
-            .select(
-                state["vid"],
-                F.coalesce(vote["vote_label"], state["label"]).alias("new_label"),
-                state["label"].alias("old_label"),
-            )
-            .select(
-                "vid",
-                F.col("new_label").alias("label"),
-                (F.col("new_label") != F.col("old_label")).alias("changed"),
-            )
-        )
-        # sender-count aggregator rides the materialization job (observe)
-        obs = Observation(f"{job_name}_s{s}")
-        observed = new_state.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("c")
-        )
-        state = loop.materialize(s, observed)
-        n_senders = int(obs.get["c"] or 0)
-        loop.commit(
-            s, {"senders": n_senders}, {"supersteps": s, "sec": time.time() - t0}
-        )
-        if n_senders == 0:
-            break
-
-    loop.cleanup()
+        ),
+        frontier=lambda state: state.where("changed").select(
+            "vid", F.col("label").alias("msg")
+        ),
+        combine=_vote,
+        apply=_adopt,
+        aggregators=count_changed,
+        master_continue=any_changed,
+    )
+    state = run_program(
+        graph, program, max_supersteps, checkpoint_dir, checkpoint_every, resume
+    )
     return state.select("vid", "label")

@@ -11,12 +11,13 @@ reaches the identical fixpoint (exact-match parity) with a *frontier*
 optimization the reference gets from vote-to-halt: only vertices whose
 label changed last round scatter (SURVEY.md §4 "delta iteration").
 
-One superstep:
+One superstep of the VertexProgram (run by graph.program.run_program):
 
-    msgs  = adjacency(frontier) → explode → groupBy(dst).min(label)
-            -- min() ≡ ValueMinCombiner, applied map-side (partial agg)
-    state = state ⟕ msgs; label' = least(label, msg)
-    frontier = rows where label' < label; stop when empty
+    frontier = (vid, label) where label changed last round
+    msgs     = adjacency ⋈ frontier → explode → groupBy(dst).min(label)
+               -- min() ≡ ValueMinCombiner, applied map-side (partial agg)
+    state    = state ⟕ msgs; label' = least(label, msg)
+    changed  = label' < label; stop when no vertex changed
 
 The frontier is typically a tiny fraction of V after a few rounds, so the
 scatter join's streamed side shrinks every superstep while the cached,
@@ -26,85 +27,40 @@ difference between O(E·diameter) and O(Σ frontier degrees) messages.
 
 from __future__ import annotations
 
-import time
+from pyspark.sql import DataFrame, functions as F
 
-from pyspark.sql import DataFrame, Observation, functions as F
-
-from hugegraph_computer_spark.graph.bsp import SuperstepLoop
 from hugegraph_computer_spark.graph.graph import Graph
-from hugegraph_computer_spark.graph.scatter import fits, scatter_min
+from hugegraph_computer_spark.graph.program import (
+    VertexProgram,
+    any_changed,
+    count_changed,
+    run_program,
+)
 
 
-def wcc(
-    graph: Graph,
-    max_supersteps: int = 100,
-    kernel: str = "sql",
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
-    job_name: str = "wcc",
-    resume: bool = False,
-) -> DataFrame:
-    """Run WCC; returns ``(vid long, component long)`` — component is the
-    min vid in the weakly connected component (isolated vertex → itself)."""
-    spark = graph.edges.sparkSession
-    loop = SuperstepLoop(
-        spark, job_name, checkpoint_dir, max_supersteps, checkpoint_every,
-        resume=resume,
-    )
-    adj = graph.adjacency()
-    if kernel not in ("sql", "arrow", "auto"):
-        raise ValueError(f"wcc: unknown kernel {kernel!r}")
-    use_arrow = kernel == "arrow" or (kernel == "auto" and fits(graph.max_vid()))
+def wcc_program(job_name: str = "wcc") -> VertexProgram:
+    """WCC as a VertexProgram over state ``(vid, label, changed)``."""
 
-    start = 1
-    state = None
-    if resume:
-        resumed = loop.resume()
-        if resumed is not None:
-            s, state, aggs = resumed
-            if aggs.get("changed", 1) == 0:
-                return state.select("vid", F.col("label").alias("component"))
-            start = s + 1
-
-    if state is None:
+    def init(graph: Graph) -> DataFrame:
         # superstep 0 (Wcc.java:47-60): label = min(self, neighbors).
         nbr_min = (
-            adj.select("vid", F.array_min("nbrs").alias("m"))
+            graph.adjacency()
+            .select("vid", F.array_min("nbrs").alias("m"))
             .groupBy("vid")
             .agg(F.min("m").alias("nbr_min"))
         )
-        state = (
-            graph.vertices()
-            .join(nbr_min, "vid", "left")
-            .select(
-                "vid",
-                F.least(F.col("vid"), F.coalesce("nbr_min", F.col("vid"))).alias(
-                    "label"
-                ),
-                # changed=true ⇒ this vertex scatters next round; at ss0
-                # everyone scatters (sendMessageToAllEdgesIf with the
-                # label<target filter is an optimization the min-combiner
-                # makes redundant).
-                F.lit(True).alias("changed"),
-            )
+        return graph.vertices().join(nbr_min, "vid", "left").select(
+            "vid",
+            F.least(F.col("vid"), F.coalesce("nbr_min", F.col("vid"))).alias("label"),
+            # changed=true ⇒ this vertex scatters next round; at ss0
+            # everyone scatters (sendMessageToAllEdgesIf with the
+            # label<target filter is an optimization the min-combiner
+            # makes redundant).
+            F.lit(True).alias("changed"),
         )
-        state = loop.save(0, state, {"changed": graph.num_vertices()}, {"supersteps": 0})
 
-    for s in range(start, max_supersteps):
-        t0 = time.time()
-        frontier = state.where("changed").select("vid", "label")
-        joined = adj.join(frontier, "vid")
-        if use_arrow:
-            msgs = scatter_min(
-                joined.select("vid", "nbrs", "label"), graph.max_vid()
-            ).groupBy("dst").agg(F.min("msg").alias("msg"))
-        else:
-            msgs = (
-                joined.select(F.explode("nbrs").alias("dst"), "label")
-                .groupBy("dst")
-                .agg(F.min("label").alias("msg"))
-            )
-        new_state = (
+    def apply(state: DataFrame, msgs: DataFrame, aggs: dict) -> DataFrame:
+        return (
             state.join(msgs, state["vid"] == msgs["dst"], "left")
             .select(
                 state["vid"],
@@ -119,18 +75,32 @@ def wcc(
                 (F.col("new_label") < F.col("old_label")).alias("changed"),
             )
         )
-        # changed-count aggregator rides the materialization job (observe)
-        obs = Observation(f"{job_name}_s{s}")
-        observed = new_state.observe(
-            obs, F.sum(F.col("changed").cast("long")).alias("c")
-        )
-        state = loop.materialize(s, observed)
-        changed = int(obs.get["c"] or 0)
-        loop.commit(
-            s, {"changed": changed}, {"supersteps": s, "sec": time.time() - t0}
-        )
-        if changed == 0:
-            break
 
-    loop.cleanup()
+    return VertexProgram(
+        name=job_name,
+        init=init,
+        frontier=lambda state: state.where("changed").select(
+            "vid", F.col("label").alias("msg")
+        ),
+        combine=lambda msgs: msgs.groupBy("dst").agg(F.min("msg").alias("msg")),
+        apply=apply,
+        aggregators=count_changed,
+        master_continue=any_changed,
+    )
+
+
+def wcc(
+    graph: Graph,
+    max_supersteps: int = 100,
+    checkpoint_dir: str | None = None,
+    checkpoint_every: int = 1,
+    job_name: str = "wcc",
+    resume: bool = False,
+) -> DataFrame:
+    """Run WCC; returns ``(vid long, component long)`` — component is the
+    min vid in the weakly connected component (isolated vertex → itself)."""
+    state = run_program(
+        graph, wcc_program(job_name), max_supersteps, checkpoint_dir,
+        checkpoint_every, resume,
+    )
     return state.select("vid", F.col("label").alias("component"))

@@ -15,7 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hugegraph_computer_spark.graph.graph import Graph
-from hugegraph_computer_spark.operators import lpa, pagerank, wcc
+from hugegraph_computer_spark.operators import coreness, lpa, pagerank, wcc
 from hugegraph_computer_spark.plans.checks import (
     assert_no_cartesian,
     assert_pushed_filters,
@@ -74,6 +74,7 @@ def test_corpus_scan_prunes_columns(spark, testdata_dir):
     (pagerank, {"l1_threshold": 1e-6, "max_supersteps": 10}, "rank"),
     (wcc, {}, "component"),
     (lpa, {}, "label"),
+    (coreness, {}, "coreness"),
 ])
 def test_resume_identical_after_partial_checkpoint(spark, tmp_path, algo, kw, col):
     g = make_graph(spark, random_edges(80, 240, seed=4))
@@ -86,6 +87,23 @@ def test_resume_identical_after_partial_checkpoint(spark, tmp_path, algo, kw, co
     shutil.rmtree(os.path.join(ck, job, steps[-1]))
     resumed = df_to_dict(algo(g, checkpoint_dir=ck, resume=True, **kw), "vid", col)
     assert resumed == full
+
+
+def test_pagerank_resume_after_stop_fills_stats(spark, tmp_path):
+    """Resuming from a snapshot that already says stop runs no superstep,
+    but still reports the supersteps executed: the resumed step + 1."""
+    g = make_graph(spark, random_edges(50, 150, seed=6))
+    ck = str(tmp_path)
+    first: dict = {}
+    full = df_to_dict(
+        pagerank(g, l1_threshold=1e-6, checkpoint_dir=ck, stats_out=first), "vid", "rank"
+    )
+    again: dict = {}
+    resumed = pagerank(
+        g, l1_threshold=1e-6, checkpoint_dir=ck, resume=True, stats_out=again
+    )
+    assert df_to_dict(resumed, "vid", "rank") == full
+    assert again["supersteps"] == first["supersteps"]
 
 
 def test_snapshot_meta_carries_lineage_and_aggregates(spark, tmp_path):

@@ -8,8 +8,8 @@ from hugegraph_computer_spark.graph.program import (
     VertexProgram,
     degree_program,
     run_program,
-    wcc_program,
 )
+from hugegraph_computer_spark.operators.wcc import wcc_program
 from pyspark.sql import functions as F
 
 from tests.oracle import ref_wcc, symmetrize, random_edges
@@ -38,12 +38,14 @@ def test_custom_program_with_aggregator_and_master_stop(spark):
 
     prog = VertexProgram(
         name="flood_max",
-        init=lambda v: v.select(
+        init=lambda g: g.vertices().select(
             "vid", F.col("vid").alias("label"), F.lit(True).alias("active")
         ),
-        message=lambda sc: sc["label"],
-        combine=lambda: [F.max("msg").alias("msg")],
-        apply=lambda state, msgs: (
+        frontier=lambda state: state.where("active").select(
+            "vid", F.col("label").alias("msg")
+        ),
+        combine=lambda msgs: msgs.groupBy("dst").agg(F.max("msg").alias("msg")),
+        apply=lambda state, msgs, aggs: (
             state.join(msgs, state["vid"] == msgs["dst"], "left")
             .select(
                 state["vid"],
@@ -58,8 +60,8 @@ def test_custom_program_with_aggregator_and_master_stop(spark):
                 (F.col("new_label") > F.col("old_label")).alias("active"),
             )
         ),
-        aggregators=lambda: {"changed": F.sum(F.col("active").cast("long"))},
-        master_continue=lambda s, aggs: seen.append((s, dict(aggs))) or True,
+        aggregators=lambda s: {"changed": F.sum(F.col("active").cast("long"))},
+        master_continue=lambda s, aggs: seen.append((s, dict(aggs))) or aggs["changed"] > 0,
     )
     g = make_graph(spark, [(0, 1), (1, 2), (2, 3)])
     out = run_program(g, prog, max_supersteps=20)

@@ -9,7 +9,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from hugegraph_computer_spark.graph.graph import Graph
-from hugegraph_computer_spark.operators import degree_centrality, links, wcc, pagerank
+from hugegraph_computer_spark.operators import (
+    degree_centrality,
+    links,
+    lpa,
+    pagerank,
+    personalized_pagerank,
+    wcc,
+)
 from hugegraph_computer_spark.operators.dedup import simhash, simhash_near_pairs
 from hugegraph_computer_spark.operators.events import sessionize, window_dedup
 from hugegraph_computer_spark.operators.kcore import coreness
@@ -196,6 +203,21 @@ def test_operators_release_checkpoints(spark):
     g.unpersist()
     # graph-owned caches released; only the two result frames remain
     assert _pinned(spark) <= before + 2
+    results = 2
+    for op, kw in (
+        (pagerank, {}),
+        (personalized_pagerank, {"sources": [0, 7]}),
+        (wcc, {}),
+        (lpa, {}),
+    ):
+        out = op(g, **kw)
+        out.count()
+        results += 1
+        # the returned state and graph-owned caches only: every earlier
+        # superstep's local checkpoint is released
+        assert _pinned(spark) <= before + results + len(g._adj_cache), op.__name__
+    g.unpersist()
+    assert _pinned(spark) <= before + results
 
 
 # ------------------------------------------------- simhash banding coverage

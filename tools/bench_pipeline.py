@@ -9,7 +9,7 @@ Phases, each timed separately (all distributed, nothing driver-side):
   3. verify   — per-row sha2(content,256) equality between source and
                 derived rows (the input_hint invariant), full table.
   4. ids      — order-preserving dense encoding + symmetrized Graph build.
-  5. pagerank — reference-exact, 10 supersteps, SQL kernel.
+  5. pagerank — reference-exact, 10 supersteps.
 
 Prints one JSON line with per-phase seconds, files/sec (synth+extract) and
 edges/sec (pagerank). Usage:
