@@ -33,8 +33,12 @@ Scale notes (100 TB / 10^12 files): edges and adjacency are hash-partitioned
 by vertex id (``repartition(n, src)``), so the per-superstep scatter join
 state ⋈ adjacency is co-partitioned and does not reshuffle the (large,
 static) adjacency side; only the small per-superstep state/message tables
-move. Dense id encoding is a one-off sort-based job (order-preserving), so
-"min id" component labels stay comparable with the reference's id order.
+move. Per-vertex structure an operator needs besides the scatter (the
+degrees PageRank initializes from) is read from that cache too, never by
+re-running the uncached edge lineage (source scan, extraction, dedup,
+repartition). Dense id encoding is a one-off sort-based job
+(order-preserving), so "min id" component labels stay comparable with the
+reference's id order.
 """
 
 from __future__ import annotations
@@ -307,13 +311,25 @@ class Graph:
     def degrees(self, weighted: bool = False) -> DataFrame:
         """(vid, deg) — out-degree of the (already symmetrized) edge table;
         0 for isolated vertices. This is the reference's ``numEdges()``
-        under default inverse-edge loading."""
-        agg = (
-            F.sum("weight").alias("deg")
-            if weighted
-            else F.count(F.lit(1)).cast("long").alias("deg")
-        )
-        d = self.edges.groupBy(F.col("src").alias("vid")).agg(agg)
+        under default inverse-edge loading.
+
+        The unweighted degree is a projection of the cached adjacency
+        (its ``deg`` column, read from each vertex's chunk 0), so it
+        never re-runs the edge lineage — source scan, extraction, dedup
+        and repartition — and builds the adjacency cache if it is not
+        there yet. ``deg`` counts parallel edges and self-loops exactly
+        like a ``count(*)`` per src. ``weighted=True`` sums ``weight``
+        over the edge table."""
+        if weighted:
+            d = self.edges.groupBy(F.col("src").alias("vid")).agg(
+                F.sum("weight").alias("deg")
+            )
+        else:
+            d = (
+                self.adjacency(keep_chunk_no=True)
+                .where(F.col("chunk_no") == 0)
+                .select("vid", "deg")
+            )
         zero = F.lit(0.0) if weighted else F.lit(0).cast("long")
         return (
             self.vertices()

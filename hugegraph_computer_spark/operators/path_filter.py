@@ -21,7 +21,8 @@ Aviator namespaces (SpreadFilter.java constants):
 Supported Aviator surface (everything the reference's own tests and doc
 examples use, plus the builtin functions a user config can call —
 VERDICT r3 missing #1): ``== != < <= > >= && || !``, arithmetic
-``+ - * / %``, parentheses, numeric/string/bool/nil literals, the cast
+``+ - * / %``, parentheses, numeric/string/bool/nil literals (a string
+literal is taken verbatim: a backslash is a backslash, not an escape), the cast
 builtins ``double(x)`` / ``long(x)`` / ``str(x)``, and the common
 Aviator library functions ``string.contains / startsWith / endsWith /
 length / indexOf`` and ``math.abs / min / max / sqrt / pow`` — each
@@ -243,7 +244,9 @@ def aviator_to_sql(expr: str, ns_map: dict[str, Callable[[str], str]]) -> str:
             body = tok[1:-1]
             if "'" in body:
                 raise ValueError(f"embedded quote in literal: {tok!r}")
-            out.append(f"'{body}'")
+            # taken verbatim: backslashes doubled for Spark's unescaping
+            # parser, undone by duckdb_dialect (as for =~ patterns below)
+            out.append("'" + body.replace("\\", "\\\\") + "'")
         elif m.lastgroup == "ident":
             low = tok.lower()
             if low in _LITERALS:

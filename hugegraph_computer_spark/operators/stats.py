@@ -18,11 +18,24 @@ from hugegraph_computer_spark.graph.graph import Graph
 def graph_stats(graph: Graph, round_to: int = 6) -> DataFrame:
     """``(stat string, value double)`` rows: n_vertices, sym_edges,
     max_degree, avg_degree (symmetrized-degree statistics, isolated
-    vertices included at degree 0)."""
-    agg = graph.degrees().agg(
-        F.count(F.lit(1)).alias("nv"),
-        F.sum("deg").alias("ne"),
-        F.max("deg").alias("mx"),
+    vertices included at degree 0).
+
+    The degrees come from one ``groupBy(src).count()`` over the edge
+    table, not from ``Graph.degrees()``: that one reads the cached
+    adjacency, which this single pass would have to build and cache
+    first."""
+    deg = graph.edges.groupBy(F.col("src").alias("vid")).agg(
+        F.count(F.lit(1)).alias("deg")
+    )
+    agg = (
+        graph.vertices()
+        .join(deg, "vid", "left")
+        .select(F.coalesce("deg", F.lit(0)).alias("deg"))
+        .agg(
+            F.count(F.lit(1)).alias("nv"),
+            F.sum("deg").alias("ne"),
+            F.max("deg").alias("mx"),
+        )
     )
 
     def row(name: str, value):

@@ -62,3 +62,27 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
     returns the count so tests can bound Python/codegen boundaries)."""
     plan = explain_str(df)
     return len(re.findall(r"WholeStageCodegen \(\d+\)", plan))
+
+
+def plan_operators(df: DataFrame) -> list[str]:
+    """Class names (``FileSourceScanExec``, ``ArrowEvalPythonExec``, ...)
+    of the operators ``df``'s physical plan runs, adaptive query stages
+    included. A cached relation is one ``InMemoryTableScanExec``: the plan
+    that filled the cache is not descended into, so a test can assert
+    that reading a cache does not recompute its lineage."""
+    todo = [df._jdf.queryExecution().executedPlan()]  # noqa: SLF001
+    ops = []
+    while todo:
+        node = todo.pop()
+        ops.append(node.getClass().getSimpleName())
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            todo.append(node.executedPlan())
+        elif name.endswith("QueryStage"):
+            todo.append(node.plan())
+        elif name == "ReusedExchange":
+            todo.append(node.child())
+        else:  # a cache scan is a leaf: its relation is no child
+            kids = node.children()
+            todo += [kids.apply(i) for i in range(kids.size())]
+    return ops

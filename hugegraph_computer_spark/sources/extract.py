@@ -48,8 +48,16 @@ def extract_edges(corpus: DataFrame, lang: str = "python") -> DataFrame:
     files = corpus.where(F.col("lang") == lang).select(
         "repo", _extract_imports("content").alias("targets")
     )
+    # explode_outer + IS NOT NULL, not explode: Spark infers a
+    # ``size(targets) > 0`` filter from a plain explode and pushes it
+    # below the projection, which copies the UDF and runs the regex
+    # extraction twice per file
     return (
-        files.select(F.col("repo").alias("src_repo"), F.explode("targets").alias("dst_repo"))
+        files.select(
+            F.col("repo").alias("src_repo"),
+            F.explode_outer("targets").alias("dst_repo"),
+        )
+        .where(F.col("dst_repo").isNotNull())
         .dropDuplicates(["src_repo", "dst_repo"])
     )
 

@@ -72,35 +72,66 @@ def _collapse_labels(pairs: DataFrame, max_rounds: int = 50) -> DataFrame:
     return comp.select(F.col("vid").alias("label"), F.col("component").alias("root"))
 
 
-def _pin_n_buckets(labels_path: str, n_buckets: int, exists: bool) -> int:
+def _observed_buckets(labels_path: str) -> int:
+    """max(bucket)+1 over the table's ``bucket=`` directories; 0 while it
+    holds no labels."""
+    try:
+        names = os.listdir(labels_path)
+    except FileNotFoundError:
+        return 0
+    ids = [int(n[len("bucket="):]) for n in names if n.startswith("bucket=")]
+    return max(ids) + 1 if ids else 0
+
+
+def _pin_n_buckets(labels_path: str, n_buckets: int, observed: int) -> int:
     """The bucket count is a TABLE property, not a call property: folding
     with a different count than the table was written with would hash
     existing vids into the wrong partitions and silently duplicate them.
-    Pin it in an underscore-prefixed sidecar (ignored by parquet
-    discovery) on creation; later batches use the pinned value and warn
-    when the caller's differs."""
-    meta = os.path.join(labels_path, "_n_buckets.json")
-    if exists:
-        try:
-            with open(meta) as fh:
-                pinned = int(json.load(fh)["n_buckets"])
-        except (OSError, ValueError, KeyError):
-            return n_buckets  # pre-sidecar table: trust the caller
-        if pinned != n_buckets:
-            import warnings
+    It is pinned in an underscore-prefixed sidecar (ignored by parquet
+    discovery), written before the table's first labels; later batches
+    use the pinned value and warn when the caller's differs. Either count
+    must exceed every ``bucket=`` directory the table already holds."""
+    try:
+        with open(os.path.join(labels_path, "_n_buckets.json")) as fh:
+            pinned = int(json.load(fh)["n_buckets"])
+    except (OSError, ValueError, KeyError):
+        pinned = None  # new table, or one written before the sidecar
+    count = n_buckets if pinned is None else pinned
+    if observed > count:
+        raise ValueError(
+            f"incremental_wcc_batch: labels table at {labels_path} holds "
+            f"bucket={observed - 1}, so it was not written with "
+            f"n_buckets={count}"
+        )
+    if pinned is not None and pinned != n_buckets:
+        import warnings
 
-            warnings.warn(
-                f"incremental_wcc_batch: labels table was created with "
-                f"n_buckets={pinned}; ignoring n_buckets={n_buckets}",
-                stacklevel=3,
-            )
-        return pinned
-    return n_buckets
+        warnings.warn(
+            f"incremental_wcc_batch: labels table was created with "
+            f"n_buckets={pinned}; ignoring n_buckets={n_buckets}",
+            stacklevel=3,
+        )
+    return count
 
 
 def _write_n_buckets(labels_path: str, n_buckets: int) -> None:
+    os.makedirs(labels_path, exist_ok=True)
     with open(os.path.join(labels_path, "_n_buckets.json"), "w") as fh:
         json.dump({"n_buckets": n_buckets}, fh)
+
+
+def _write_buckets(labels: DataFrame, n_parts: int, labels_path: str) -> None:
+    """Replace exactly the ``bucket=`` directories present in ``labels``
+    (dynamic partition overwrite keeps every other bucket and the
+    sidecar); routing rows by bucket lands each bucket in ~one task, so
+    small files do not accumulate batch over batch."""
+    (
+        labels.repartition(n_parts, "bucket")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("bucket")
+        .parquet(labels_path)
+    )
 
 
 def incremental_wcc_batch(
@@ -111,10 +142,11 @@ def incremental_wcc_batch(
 ) -> None:
     """Fold one micro-batch of edges into the bucket-partitioned labels
     table at ``labels_path``, rewriting only affected buckets."""
-    exists = os.path.exists(labels_path)
     if batch.isEmpty():
         return  # nothing to fold; never write an empty (schema-less) table
-    n_buckets = _pin_n_buckets(labels_path, n_buckets, exists)
+    observed = _observed_buckets(labels_path)
+    exists = observed > 0
+    n_buckets = _pin_n_buckets(labels_path, n_buckets, observed)
 
     # every localCheckpoint pinned by this fold is released on exit — a
     # long-running stream must not accumulate executor storage per batch
@@ -184,13 +216,10 @@ def _incremental_wcc_batch(
                 F.coalesce(mapping["root"], out["component"]).alias("component"),
                 "bucket",
             )
-        (
-            out.repartition(n_buckets, "bucket")
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(labels_path)
-        )
+        # sidecar first: a crash before the labels land leaves the count
+        # pinned for the replayed batch
         _write_n_buckets(labels_path, n_buckets)
+        _write_buckets(out, n_buckets, labels_path)
         return
 
     if pairs.isEmpty():
@@ -231,19 +260,10 @@ def _incremental_wcc_batch(
             F.coalesce(changed["root"], content["component"]).alias("component"),
             "bucket",
         )
-    # materialize BEFORE overwriting the buckets the plan reads from;
-    # then route rows so each rewritten bucket lands in ~one task —
-    # without this every write task can spray files into every affected
-    # bucket and small files accumulate batch over batch
+    # materialize BEFORE overwriting the buckets the plan reads from
     content = content.localCheckpoint(eager=True)
     pinned.append(content)
-    (
-        content.repartition(len(aff_list), "bucket")
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(labels_path)
-    )
+    _write_buckets(content, len(aff_list), labels_path)
 
 
 def run_incremental_wcc(

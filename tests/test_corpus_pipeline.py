@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from hugegraph_computer_spark.graph.graph import dense_ids
 from hugegraph_computer_spark.operators import pagerank, wcc
+from hugegraph_computer_spark.plans.checks import plan_operators
 from hugegraph_computer_spark.sources.corpus import synth_corpus
 from hugegraph_computer_spark.sources.extract import (
     assert_content_integrity,
@@ -46,6 +47,42 @@ def test_extraction_matches_regex_oracle(spark):
             exp.add((row["repo"], m.group(1)))
     assert got == exp
     assert got, "fixture must actually produce edges"
+
+
+def test_extract_edges_runs_extraction_udf_once(spark, tmp_path):
+    """The import-regex pandas UDF runs once per file: a plain explode
+    would let Spark copy it into an inferred ``size(targets) > 0`` filter.
+    Files without imports must still yield no edge."""
+    path = str(tmp_path / "corpus")
+    synth_corpus(spark, n_repos=40, files_per_repo=3, seed=9).write.parquet(path)
+    corpus = spark.read.parquet(path)
+    edges = extract_edges(corpus)
+    got = [(r["src_repo"], r["dst_repo"]) for r in edges.collect()]
+    assert plan_operators(edges).count("ArrowEvalPythonExec") == 1
+    exp, no_imports = set(), 0
+    for row in corpus.where(F.col("lang") == "python").collect():
+        found = re.findall(r"^import (repo_\d{6})$", row["content"], re.M)
+        exp.update((row["repo"], dst) for dst in found)
+        no_imports += not found
+    assert sorted(got) == sorted(exp) and got
+    assert no_imports, "fixture must hold import-less python files"
+
+
+def test_degrees_read_cached_adjacency_not_ingest(spark, tmp_path):
+    """Once the adjacency is cached, ``Graph.degrees()`` (PageRank's and
+    PPR's init) reads it and never re-runs the ingest lineage: no parquet
+    scan and no extraction UDF in its executed plan."""
+    path = str(tmp_path / "corpus")
+    synth_corpus(spark, n_repos=30, files_per_repo=2, seed=3).write.parquet(path)
+    g, _ = corpus_graph(spark.read.parquet(path))
+    g.adjacency().count()
+    deg = g.degrees()
+    assert deg.count() == g.num_vertices()
+    deg.collect()
+    ops = plan_operators(deg)
+    assert "InMemoryTableScanExec" in ops, ops
+    assert "FileSourceScanExec" not in ops and "ArrowEvalPythonExec" not in ops, ops
+    g.unpersist()
 
 
 def test_java_rows_excluded(spark):

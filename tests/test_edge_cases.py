@@ -6,7 +6,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from hugegraph_computer_spark.graph.graph import Graph
+from hugegraph_computer_spark.graph.graph import DEFAULT_ADJ_CHUNK, Graph
 from hugegraph_computer_spark.operators import (
     degree_centrality,
     lpa,
@@ -102,6 +102,65 @@ def test_graph_build_invariants(spark, edges):
     # vertices = endpoints
     vs = {r["vid"] for r in g.vertices().collect()}
     assert vs == {v for e in rows for v in e}
+
+
+def _degree_graph(spark, case):
+    hub = DEFAULT_ADJ_CHUNK * 2 + 5  # three chunk rows
+    if case == "multigraph":
+        edges = [(0, 1), (0, 1), (1, 2), (2, 0), (2, 0), (2, 0)]
+        return make_graph(spark, edges, edge_freq="multiple")
+    if case == "self_loops":
+        edges = [(0, 0), (0, 1), (1, 1), (1, 1), (1, 2)]
+        return make_graph(spark, edges, edge_freq="multiple")
+    if case == "isolated":
+        vertices = spark.createDataFrame([(v,) for v in range(10)], "vid long")
+        return make_graph(spark, [(0, 1), (1, 2), (3, 4)], vertices=vertices)
+    if case == "hub":
+        return make_graph(spark, [(0, i) for i in range(1, hub + 1)])
+    assert case == "directed"  # vertex 2 is only ever a dst
+    return make_graph(spark, [(0, 1), (1, 2), (3, 2), (3, 0)], symmetrize=False)
+
+
+@pytest.mark.parametrize(
+    "case", ["multigraph", "self_loops", "isolated", "hub", "directed"]
+)
+def test_degrees_equal_edge_table_count(spark, case):
+    """``Graph.degrees()`` reads ``deg`` off the cached adjacency; it must
+    equal a ``count(*)`` per src over the edge table — parallel edges and
+    self-loops counted, 0 for isolated and dst-only vertices, one row per
+    vertex however many chunk rows a hub spans."""
+    g = _degree_graph(spark, case)
+    counts = {
+        r["src"]: r["count"] for r in g.edges.groupBy("src").count().collect()
+    }
+    expected = {r["vid"]: counts.get(r["vid"], 0) for r in g.vertices().collect()}
+    rows = g.degrees().collect()
+    assert len(rows) == len(expected)
+    assert {r["vid"]: r["deg"] for r in rows} == expected
+    if case == "hub":
+        assert g.adjacency(keep_chunk_no=True).where("vid = 0").count() == 3
+    if case in ("isolated", "directed"):
+        assert 0 in expected.values()
+    g.unpersist()
+
+
+def test_graph_stats_builds_no_adjacency(spark):
+    """graph_stats is one pass over the edge table: it must neither build
+    nor read the adjacency cache."""
+    from hugegraph_computer_spark.operators.stats import graph_stats
+    from hugegraph_computer_spark.plans.checks import plan_operators
+
+    vertices = spark.createDataFrame([(v,) for v in range(6)], "vid long")
+    g = make_graph(spark, [(0, 1), (0, 1), (1, 2), (2, 2)], vertices=vertices,
+                   edge_freq="multiple")
+    stats = graph_stats(g)
+    got = {r["stat"]: r["value"] for r in stats.collect()}
+    # symmetrized multiset: 0-1 twice (4 rows), 1-2 (2), 2-2 twice (2);
+    # degrees 0:2, 1:3, 2:3, 3..5:0
+    assert got == {"n_vertices": 6.0, "sym_edges": 8.0, "max_degree": 3.0,
+                   "avg_degree": round(8 / 6, 6)}
+    assert g._adj_cache == {}
+    assert "InMemoryTableScanExec" not in plan_operators(stats)
 
 
 def test_mega_hub_skew_pagerank_and_wcc(spark):

@@ -46,6 +46,32 @@ def test_aviator_reference_expressions():
     )
 
 
+def test_string_literal_backslash_agrees_across_engines(spark):
+    """A plain string literal is taken verbatim in both engines: Spark's
+    SQL parser unescapes backslashes inside literals (``'a\\d'`` would
+    compare against ``ad``), DuckDB's does not."""
+    import duckdb
+
+    from hugegraph_computer_spark.operators.path_filter import duckdb_dialect
+
+    # s = a\d, built without a backslash escape in either dialect
+    row = "SELECT concat('a', chr(92), 'd') AS s"
+    cases = [
+        ("$element.s == 'a\\d'", True),
+        ("$element.s == 'ad'", False),
+        ("$element.s != 'a\\d'", False),
+        ("string.endsWith($element.s, '\\d')", True),
+        ("string.length('a\\') == 2", True),
+    ]
+    for expr, expected in cases:
+        sql = aviator_to_sql(expr, _E)
+        got_duck = duckdb.sql(
+            f"SELECT ({duckdb_dialect(sql)}) AS v FROM ({row})"
+        ).fetchone()[0]
+        got_spark = spark.sql(f"SELECT ({sql}) AS v FROM ({row})").collect()[0]["v"]
+        assert got_spark == got_duck == expected, (expr, sql, got_spark, got_duck)
+
+
 def test_aviator_rejects_unsafe_or_unsupported():
     for bad in [
         "$foo.x == 1",            # unknown namespace

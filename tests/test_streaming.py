@@ -6,6 +6,9 @@ edges seen so far."""
 from __future__ import annotations
 
 import os
+import warnings
+
+import pytest
 
 from hugegraph_computer_spark.graph.graph import Graph
 from hugegraph_computer_spark.operators import wcc
@@ -89,6 +92,61 @@ def test_incremental_wcc_noop_batch_rewrites_nothing(spark, tmp_path):
     before = _bucket_files(labels_path)
     incremental_wcc_batch(edges_df(spark, [(0, 1)]), labels_path, spark)
     assert _bucket_files(labels_path) == before
+
+
+def _crash_on_second_write(monkeypatch):
+    """Make the second of the first batch's two writes (bucket-count
+    sidecar, labels data) raise, whichever order they run in — the
+    process dying between them."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from hugegraph_computer_spark.streaming import ingest
+
+    calls = []
+
+    def crashing(real):
+        def write(*args, **kwargs):
+            calls.append(real)
+            if len(calls) == 2:
+                raise RuntimeError("simulated crash")
+            return real(*args, **kwargs)
+
+        return write
+
+    monkeypatch.setattr(ingest, "_write_n_buckets", crashing(ingest._write_n_buckets))
+    monkeypatch.setattr(DataFrameWriter, "parquet", crashing(DataFrameWriter.parquet))
+
+
+def test_first_batch_crash_keeps_bucket_count(spark, tmp_path, monkeypatch):
+    """A crash between the first batch's two writes must leave the bucket
+    count pinned: the restart replays the batch with a different
+    ``n_buckets``, and every vid must still be stored exactly once."""
+    labels_path = str(tmp_path / "labels")
+    b1 = [(i, i + 1000) for i in range(0, 40, 2)]
+    _crash_on_second_write(monkeypatch)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        incremental_wcc_batch(edges_df(spark, b1), labels_path, spark)
+    monkeypatch.undo()
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore")  # the pinned count overrides 4
+        for batch in (b1, [(0, 2)]):
+            incremental_wcc_batch(edges_df(spark, batch), labels_path, spark, n_buckets=4)
+    rows = spark.read.parquet(labels_path).collect()
+    assert sorted(r["vid"] for r in rows) == sorted({v for e in b1 for v in e})
+    adj = symmetrize(b1 + [(0, 2)])
+    assert {r["vid"]: r["component"] for r in rows} == ref_wcc(sorted(adj), adj)
+
+
+def test_unpinned_table_rejects_too_few_buckets(spark, tmp_path):
+    """A labels table without the sidecar (written before it existed)
+    holds ``bucket=`` directories up to max(bucket); a caller's count at
+    or below that max cannot be the one the table was written with."""
+    labels_path = str(tmp_path / "labels")
+    b1 = [(i, i + 1000) for i in range(0, 40, 2)]
+    incremental_wcc_batch(edges_df(spark, b1), labels_path, spark)
+    os.remove(os.path.join(labels_path, "_n_buckets.json"))
+    with pytest.raises(ValueError, match="n_buckets"):
+        incremental_wcc_batch(edges_df(spark, [(0, 2)]), labels_path, spark, n_buckets=4)
 
 
 def test_streaming_files_end_to_end(spark, tmp_path):
